@@ -954,7 +954,7 @@ object SparkEntry {
     val esdArr = arrLit(Dims.earthSystemDisciplines)
     val core = "http://wis.wmo.int/spec/wcmp/2/conf/core"
     val kebab = "^[a-z0-9][a-z0-9-]*$"
-    // level-wise WIS2 channel walk (Dims.validTopicChannel; no published
+    // level-wise WIS2 channel walk (TopicChannelValid; no published
     // sub-discipline table in the verify environment -> levels 8+ are
     // charset grammar). `ch` is the channel string expression.
     def validChannel(ch: String): String = {
@@ -1229,7 +1229,7 @@ object SparkEntry {
     val w = "[\\p{L}\\p{N}_]"
     // the apostrophe inside the class is doubled for SQL string embedding
     val wordRe = s"$w[\\p{L}\\p{N}_'']*$w|$w"
-    // Python float() grammar, kept in sync with Wcmp2Functions.floatLike
+    // Python float() grammar, kept in sync with TextKernels.floatLikeToken
     val floatRe = {
       val d = "[0-9](?:_?[0-9])*"
       s"^[+-]?((?i:inf(?:inity)?|nan)|(?:$d(?:\\.(?:$d)?)?|\\.$d)(?:[eE][+-]?$d)?)$$$$"

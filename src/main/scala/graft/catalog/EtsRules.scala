@@ -5,30 +5,27 @@ import org.apache.spark.sql.functions._
 import graft.dims.Dims
 import graft.functions.{GeoFunctions, Wcmp2Functions => F}
 
-/** Columns every row-local rule is built from. `rec` is the payload parsed
-  * once via `from_json(content, Wcmp2Schema.root)` and materialized behind
-  * a Generate barrier (see [[graft.engine.Validator.validate]]) so the
-  * optimizer can never re-inline the parse per reference; `geometry` is the
-  * raw `$.geometry` JSON (variable nesting depth, see [[GeoFunctions]]);
-  * `geoPositions` its pre-flattened coordinate list; `propsKeys` are the
-  * top-level keys of the raw `$.properties` object — the presence-vs-null
-  * channel that `from_json` cannot provide (SURVEY.md §7.4-1). */
-case class RecordCols(content: Column, rec: Column, geometry: Column,
-                      geoPositions: Column, propsKeys: Column,
-                      titleMisspelledOpt: Option[Column] = None,
-                      descMisspelledOpt: Option[Column] = None,
-                      pre: Map[String, Column] = Map.empty) {
-  import graft.functions.{Wcmp2Functions => WF}
-  /** Pre-materialized kernels (second Generate barrier in the Validator).
-    * Each fallback recomputes the expression per reference — correct but
-    * slower; the Validator always materializes them once per row. */
-  def titleMisspelled: Column = titleMisspelledOpt.getOrElse(
-    WF.misspelled(rec.getField("properties").getField("title")))
-  def descMisspelled: Column = descMisspelledOpt.getOrElse(
-    WF.misspelled(rec.getField("properties").getField("description")))
-  def preOr(key: String, fallback: => Column): Column =
-    pre.getOrElse(key, fallback)
-}
+/** Columns every row-local rule is built from, all materialized by
+  * [[graft.engine.Validator.validate]] behind its two Generate barriers so
+  * the optimizer can never re-inline a parse or a kernel per reference.
+  *
+  * From the single [[graft.expressions.JsonFacts]] parse of `content`:
+  * `rec`, the payload struct (`from_json(content, Wcmp2Schema.root)`
+  * parity); `geometry`, the raw `$.geometry` JSON slice (variable nesting
+  * depth, see [[GeoFunctions]]); `geoPositions`, its pre-flattened
+  * coordinate list; `propsKeys`, the top-level keys of the raw
+  * `$.properties` object — the presence-vs-null channel `from_json`
+  * cannot provide (SURVEY.md §7.4-1).
+  *
+  * From the per-row kernels over `rec`: `titleMisspelled` and
+  * `descMisspelled` ([[graft.expressions.Misspelled]]), `titleFacts` (the
+  * K1 [[graft.expressions.TitleWords]] struct), `httpLinks` (the K5
+  * [[graft.expressions.LinkPoolExpr]] pool) and `previews` (the K4
+  * [[graft.expressions.Previews]] list). */
+case class RecordCols(rec: Column, geometry: Column, geoPositions: Column,
+                      propsKeys: Column, titleMisspelled: Column,
+                      descMisspelled: Column, titleFacts: Column,
+                      httpLinks: Column, previews: Column)
 
 /** One ETS conformance test compiled to Catalyst predicates.
   *
@@ -174,8 +171,9 @@ object EtsRules {
 
   /** links (`ets.py:440-489`) — ordered first-failure per link, links in
     * document order. Channel topic validity = level-wise walk of the
-    * vendored hierarchy tables ([[Dims.validTopicChannel]]), the analog
-    * of pywis_topics' `th.validate`. */
+    * vendored hierarchy tables
+    * ([[graft.expressions.TopicChannelValid]]), the analog of
+    * pywis_topics' `th.validate`. */
   def links(r: RecordCols): EtsRule = {
     val links = r.rec.getField("links")
     val perLink = transform(links, l => {
@@ -190,8 +188,6 @@ object EtsRules {
            concat(lit("invalid link relation "), rel))
         .when(href.startsWith("mqtt") && channel.isNull,
               "missing channel for Pub/Sub link")
-        // native split-once walk; Dims.validTopicChannel is the
-        // declarative reference impl (parity: OptimizationParitySpec)
         .when(href.startsWith("mqtt") &&
                 (channel.startsWith("origin/a/wis2") ||
                  channel.startsWith("cache/a/wis2")) &&

@@ -110,26 +110,18 @@ object KpiRules {
     when(coalesce(bad, lit(false)), msg)
 
   /** kpi_title — Good quality title, total 8 (`kpi.py:82-163`).
-    * The four scalar title facts (all-alnum words, sentence case, acronym
-    * count, bulletin header) read the pre-materialized TitleWords kernel
-    * fields when the Validator provides them — the declarative
-    * formulations below are the reference impls (r6 parity:
-    * OptimizationParitySpec) and the fallback for direct catalog use. */
+    * The word split and the four scalar title facts (all-alnum words,
+    * sentence case of the acronym-stripped title, acronym count, bulletin
+    * header) are fields of the TitleWords kernel struct. */
   def title(r: RecordCols): KpiRule = {
-    val acronymRe = "\\b([A-Z]{2,}\\d*)\\b"
-    val bulletinRe = "[A-Z]{4}\\d{2}[\\s_]*[A-Z]{4}"
     val t = prop(r, "title")
-    val words = r.preOr("title_words", F.pySplitWs(t))
-    val stripped = r.preOr("title_stripped",
-      F.pyStrip(regexp_replace(t, acronymRe, "")))
+    val words = r.titleFacts.getField("words")
     val misspelled = r.titleMisspelled
-    val allAlnum = r.preOr("title_all_alnum", forall(words, F.pyIsAlnum))
-    val capOk = r.preOr("title_cap_ok",
-      F.pyCapitalize(stripped) === stripped)
-    val nAcronyms = r.preOr("title_n_acronyms",
-      size(regexp_extract_all(t, lit(acronymRe), lit(1))))
-    val hasBulletin = coalesce(
-      r.preOr("title_has_bulletin", t.rlike(bulletinRe)), lit(false))
+    val allAlnum = r.titleFacts.getField("all_alnum")
+    val capOk = r.titleFacts.getField("cap_ok")
+    val nAcronyms = r.titleFacts.getField("n_acronyms")
+    val hasBulletin =
+      coalesce(r.titleFacts.getField("has_bulletin"), lit(false))
     val p1 = point(t.isNotNull) // 'Title is present' (kpi.py:102-103)
     val p2 = point(size(words) >= 3)
     val p3 = point(length(t) <= 150)
@@ -224,8 +216,7 @@ object KpiRules {
   /** kpi_graphic_overview — total 3 per `rel == 'preview'` link
     * (`kpi.py:279-328`). */
   def graphicOverview(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val previews = r.preOr("previews",
-      filter(r.rec.getField("links"), l => l.getField("rel") === "preview"))
+    val previews = r.previews
     def mimeOk(l: Column): Column = {
       val declared = coalesce(l.getField("type"), lit(""))
       declared.isInCollection(Dims.webImageMimes) &&
@@ -247,38 +238,8 @@ object KpiRules {
   /** kpi_links_health — total 2 per http(s) URL in the pooled link set
     * (`kpi.py:330-405`): record links, then per theme its concept `url`s
     * and its scheme, then contact links. */
-  /** The pooled link set of kpi_links_health (`kpi.py:356-374`): record
-    * links, then per theme its concept urls and scheme, then contact
-    * links — filtered to http(s). Exposed so the Validator can
-    * materialize it once per row (it is referenced by total, score and
-    * comments). */
-  def httpLinkPool(r: RecordCols): Column = {
-    val hrefType = (href: Column, t: Column) =>
-      struct(href.as("href"), t.as("type"))
-    val recordLinks = transform(r.rec.getField("links"),
-      l => hrefType(l.getField("href"), l.getField("type")))
-    val themeLinks = flatten(transform(prop(r, "themes"), t => concat(
-      transform(filter(t.getField("concepts"),
-                       c => c.getField("url").isNotNull),
-                c => hrefType(c.getField("url"), lit(null).cast(StringType))),
-      array(hrefType(t.getField("scheme"), lit(null).cast(StringType))))))
-    val emptyContactLinks = array()
-      .cast(ArrayType(graft.model.Wcmp2Schema.contactLink))
-    val contactLinks = flatten(transform(prop(r, "contacts"), c =>
-      transform(coalesce(c.getField("links"), emptyContactLinks),
-                l => hrefType(l.getField("href"), lit(null).cast(StringType)))))
-    val emptyPool = array().cast(ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("type", StringType)))))
-    val pool = concat(
-      coalesce(recordLinks, emptyPool),
-      coalesce(themeLinks, emptyPool),
-      coalesce(contactLinks, emptyPool))
-    filter(pool, p =>
-      p.getField("href").isNotNull && p.getField("href").startsWith("http"))
-  }
-
   def linksHealth(r: RecordCols, probe: LinkProbe): KpiRule = {
-    val httpLinks = r.preOr("http_links", httpLinkPool(r))
+    val httpLinks = r.httpLinks
     def typeOk(p: Column): Column =
       probe.mime(p.getField("href"), p.getField("type"))
         .isInCollection(Dims.validMimes)

@@ -184,21 +184,23 @@ object DatasetRules {
   /** The distinct probe-able URL pool of a records table — the SAME
     * pooled link set kpi_links_health scores (record links ++ theme
     * concept urls ++ theme schemes ++ contact links, http(s) only,
-    * `kpi.py:356-374`), extracted table-wide: parse once behind a
-    * Generate barrier, explode the pool, distinct. Feed the result to
-    * [[graft.sources.UrlSource.probeTable]] and the probed dim back into
-    * [[linkHealthJoin]] (table-scale) or
+    * `kpi.py:356-374`), extracted table-wide with the Validator's own
+    * kernels: one [[graft.expressions.JsonFacts]] parse behind a Generate
+    * barrier, the [[graft.expressions.LinkPoolExpr]] pool exploded,
+    * distinct. Feed the result to [[graft.sources.UrlSource.probeTable]]
+    * and the probed dim back into [[linkHealthJoin]] (table-scale) or
     * [[graft.catalog.MapLinkProbe.fromTable]] (in-plan seam) — the
     * production replacement for the reference's live per-record probing
     * (`pywcmp/util.py:149-200`). */
   def recordLinkUrls(records: DataFrame): org.apache.spark.sql.Dataset[String] = {
     import records.sparkSession.implicits._
-    val rc = graft.catalog.RecordCols(col("content"), col("rec"),
-      lit(null), lit(null), lit(null))
     records
-      .select(explode(array(from_json(col("content"),
-        graft.model.Wcmp2Schema.root))).as("rec"))
-      .select(explode(graft.catalog.KpiRules.httpLinkPool(rc)).as("p"))
+      .select(explode(array(graft.expressions.JsonFacts.jsonFacts(
+        col("content")))).as("_p"))
+      .select(explode(graft.expressions.LinkPoolExpr.linkPool(
+        col("_p.rec.links"),
+        col("_p.rec.properties.themes"),
+        col("_p.rec.properties.contacts"))).as("p"))
       .select(col("p.href")).where(col("href").isNotNull)
       .distinct().as[String]
   }

@@ -137,10 +137,8 @@ object Reports {
                   probe: graft.catalog.LinkProbe = graft.catalog.OfflineLinkProbe,
                   failOnEts: Boolean = true,
                   kpi: Option[String] = None): (String, Option[String], Int) = {
-    import spark.implicits._
-    val df = Seq(("adhoc", "record.json", "0" * 40, "und", json))
-      .toDF("repo", "path", "commit", "lang", "content")
-    val gated = withEtsGate(Validator.validate(df, probe), failOnEts)
+    val gated = withEtsGate(
+      Validator.validate(oneRowTable(spark, json), probe), failOnEts)
     val selected = kpi.map(selectKpi(gated, _)).getOrElse(gated)
     val row = selected.select(col("parse_ok"),
       etsReportJson(runDatetime).as("ets"),
@@ -151,6 +149,16 @@ object Reports {
       throw new IllegalArgumentException(
         "Encoding error: record is not valid JSON")
     (row.getString(1), Option(row.getString(2)), row.getInt(3))
+  }
+
+  /** The 1-row records table `(repo, path, commit, lang, content)` that
+    * every single-record entry point validates ([[validateOneWithCode]],
+    * the HTTP service). */
+  private[graft] def oneRowTable(spark: org.apache.spark.sql.SparkSession,
+                                 json: String): DataFrame = {
+    import spark.implicits._
+    Seq(("adhoc", "record.json", "0" * 40, "und", json))
+      .toDF("repo", "path", "commit", "lang", "content")
   }
 
   /** Driver exit code semantics: the reference CLI exits with the FAILED

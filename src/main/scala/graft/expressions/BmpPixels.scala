@@ -1,10 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
 
 /** REAL pixel decode for uncompressed BMP (BITMAPINFOHEADER family,
   * `BI_RGB`) — like PNG ([[PngPixels]]), the format needs no codec
@@ -26,16 +23,6 @@ import org.apache.spark.sql.types.DataType
   * bomb caps before any allocation, Long arithmetic so forged u32/i32
   * header fields cannot wrap Int, bounds-checked reads, never throws.
   */
-case class BmpPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.BmpPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    BmpPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "bmp_pixels"
-}
-
 object BmpPixels {
   /** (byte[]) -> InternalRow(width, height, channels, raster) or null;
     * raster layout identical to [[PngPixels.pixels]]. */
@@ -148,10 +135,5 @@ object BmpPixels {
       y += 1
     }
     out
-  }
-
-  def bmpPixels(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(BmpPixels(shims.expression(c)))
   }
 }

@@ -1,10 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
 
 /** REAL pixel decode for GIF (87a/89a) — the third image format fully
   * decodable without a codec library: GIF's only compression is LZW
@@ -39,16 +36,6 @@ import org.apache.spark.sql.types.DataType
   * GIF and a twin flattened onto some page color other than the GIF's
   * own background can still hash differently.
   */
-case class GifPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.GifPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    GifPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "gif_pixels"
-}
-
 object GifPixels {
   /** (byte[]) -> InternalRow(width, height, 3, raster) or null; raster
     * layout identical to [[PngPixels.pixels]]. First frame only;
@@ -326,10 +313,5 @@ object GifPixels {
     out.write(0)    // block terminator
     out.write(0x3B) // trailer
     out.toByteArray
-  }
-
-  def gifPixels(c: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(GifPixels(shims.expression(c)))
   }
 }

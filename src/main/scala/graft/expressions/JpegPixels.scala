@@ -1,10 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.DataType
 
 /** REAL pixel decode for Huffman-coded JPEG (ITU-T T.81) — the
   * dominant web image format, previously the declared lossy-codec stub.
@@ -51,16 +48,6 @@ import org.apache.spark.sql.types.DataType
   * `q_image_neardup` oracle: bytes differ per variant (COM padding,
   * restart intervals), pixels are a pure function of the seed.
   */
-case class JpegPixels(child: Expression) extends MediaProbe {
-  override def dataType: DataType = PngPixels.pixType
-  protected val kernel = "graft.expressions.JpegPixels.pixels"
-  override def nullSafeEval(input: Any): Any =
-    JpegPixels.pixels(input.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-  override def prettyName: String = "jpeg_pixels"
-}
-
 object JpegPixels {
   /** decoded-raster bomb cap, shared with the lossless family */
   val MaxRaster: Long = PngPixels.MaxRaster
@@ -771,9 +758,4 @@ object JpegPixels {
     }
   }
   // scalastyle:on method.length cyclomatic.complexity
-
-  def jpegPixels(media: Column): Column = {
-    import org.apache.spark.sql.graft.shims
-    shims.column(JpegPixels(shims.expression(media)))
-  }
 }

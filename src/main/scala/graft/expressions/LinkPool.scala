@@ -15,10 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array<struct<href,type>>`, computed in one native walk over the
   * already-parsed struct arrays.
   *
-  * Replaces the interpreted transform/filter/flatten/concat chain of
-  * [[graft.catalog.KpiRules.httpLinkPool]] (kept as the documented
-  * declarative reference and fallback), with its exact semantics,
-  * including the quirks the declarative version exhibits:
+  * Replaces an interpreted transform/filter/flatten/concat chain (kept in
+  * src/test as the DeclarativeReference pool, parity-tested in
+  * OptimizationParitySpec) with its exact semantics, including the
+  * quirks the declarative version exhibits:
   *
   *  - only entries whose href is non-null and starts with "http" enter
   *    the pool (the declarative version's final filter — null link

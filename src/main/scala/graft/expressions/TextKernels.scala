@@ -19,20 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * chains for the title words), together a measurable slice of hot-path
   * CPU. Each kernel is one static JVM call with precompiled patterns and
   * a prebuilt hash set; semantics are IDENTICAL to the declarative
-  * formulations in [[graft.functions.Wcmp2Functions]] (kept as the
-  * documented reference implementation and the [[graft.catalog.RecordCols]]
-  * fallback), asserted token-for-token by FunctionsSpec parity tests.
+  * formulations they replaced (kept in src/test as DeclarativeReference),
+  * asserted token-for-token by the OptimizationParitySpec parity tests.
   */
 object TextKernels {
-
-  /** float-parseable per Python `float()` — such tokens are never
-    * spell-checked (pyspellchecker `_check_if_should_check`). Shares the
-    * declarative impl's pattern (Python grammar: underscores only between
-    * digits; inf/infinity/nan literals). Retained as the slow-path oracle
-    * for [[floatLikeToken]]; the hot path never runs it (r6: regex
-    * machinery was ~2/3 of this kernel's samples). */
-  private val floatRe =
-    Pattern.compile(graft.functions.Wcmp2Functions.floatLike)
 
   private lazy val dictionary: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](16384)
@@ -43,7 +33,7 @@ object TextKernels {
   /** `(?U)\w` per java.util.regex with UNICODE_CHARACTER_CLASS:
     * [\p{Alpha}\p{gc=Mn}\p{gc=Me}\p{gc=Mc}\p{Digit}\p{gc=Pc}
     * \p{IsJoin_Control}] — the exact class the tokenizer regex used;
-    * parity pinned against the regex in FunctionsSpec. */
+    * parity pinned against the regex in OptimizationParitySpec. */
   private[graft] def isWordCp(cp: Int): Boolean = {
     if (cp < 128) // ASCII fast path: [0-9A-Za-z_]
       (cp >= 'a' && cp <= 'z') || (cp >= 'A' && cp <= 'Z') ||
@@ -58,14 +48,17 @@ object TextKernels {
     }
   }
 
-  /** Exact-match equivalent of [[graft.functions.Wcmp2Functions.floatLike]]
+  /** float-parseable per Python `float()` — such tokens are never
+    * spell-checked (pyspellchecker `_check_if_should_check`). Exact-match
+    * equivalent of the declarative `floatLike` regex (Python grammar:
+    * underscores only between digits; inf/infinity/nan literals)
     * RESTRICTED to tokenizer output: tokens contain only word chars and
     * apostrophes (never '+', '-' or '.'), and the text is lowercased, so
     * the only reachable float forms are `inf`, `infinity`, `nan` and
     * `digits(_digits)*(e digits(_digits)*)?` over ASCII digits (the
     * pattern's digit class is ASCII [0-9]; '.', sign and uppercase-E arms
-    * are unreachable). Parity vs the regex pinned in FunctionsSpec over
-    * the full token space. */
+    * are unreachable). Parity vs the regex pinned in
+    * OptimizationParitySpec over the full token space. */
   private[graft] def floatLikeToken(s: String): Boolean = {
     val n = s.length
     if (n == 0) return false
@@ -153,11 +146,12 @@ object TextKernels {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
-  /** `^[\p{L}\p{N}]+$` ([[graft.functions.Wcmp2Functions.pyIsAlnum]])
-    * without regex: non-empty, every codepoint gc L* or N*. matches()
-    * semantics are safe here because the inputs are whitespace-split
-    * words (no embedded line terminators, so rlike's find() with anchors
-    * coincides). Parity pinned per-codepoint in OptimizationParitySpec. */
+  /** `^[\p{L}\p{N}]+$` (Python `str.isalnum`, the declarative
+    * `pyIsAlnum`) without regex: non-empty, every codepoint gc L* or N*.
+    * matches() semantics are safe here because the inputs are
+    * whitespace-split words (no embedded line terminators, so rlike's
+    * find() with anchors coincides). Parity pinned per-codepoint in
+    * OptimizationParitySpec. */
   private[graft] def isAlnumPy(s: String): Boolean = {
     val n = s.length
     if (n == 0) return false
@@ -175,10 +169,10 @@ object TextKernels {
     true
   }
 
-  /** `pyCapitalize(c) === c` ([[graft.functions.Wcmp2Functions
-    * .pyCapitalize]]: first char upper, rest lower, '' -> '') computed
-    * with the SAME UTF8String substring/upper/lower/concat kernels the
-    * declarative expression compiles to — bit parity by construction. */
+  /** `pyCapitalize(c) === c` (Python `str.capitalize`: first char
+    * upper, rest lower, '' -> '') computed with the SAME UTF8String
+    * substring/upper/lower/concat kernels the declarative expression
+    * compiles to — bit parity by construction. */
   private def isCapitalized(u: UTF8String): Boolean = {
     if (u.numChars() == 0) true
     else UTF8String.concat(
@@ -199,7 +193,7 @@ object TextKernels {
     * acronym scans showed in the hot-path samples; the tree shrink also
     * cuts per-query planning). The ws-run splitter is a char scan;
     * \s-class and per-fact parity with the declarative reference impls
-    * are pinned in FunctionsSpec/OptimizationParitySpec. */
+    * are pinned in OptimizationParitySpec. */
   def titleWords(title: UTF8String): InternalRow = {
     val s = title.toString
     val stripped0 = pyStrip(s)

@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native kernel for the level-wise WIS2 topic-channel walk
-  * ([[graft.dims.Dims.validTopicChannel]] is the declarative reference
-  * implementation, parity-pinned in OptimizationParitySpec).
+/** Native kernel for the level-wise WIS2 topic-channel walk (the
+  * declarative walk it replaced is kept in src/test as
+  * DeclarativeReference, parity-pinned in OptimizationParitySpec).
   *
   * Why a kernel: the declarative walk references `split(channel, "/")`
   * ~12 times across its level checks, and it executes INSIDE the links
@@ -97,7 +97,7 @@ object TopicChannelValid {
     true
   }
 
-  /** The walk of [[graft.dims.Dims.validTopicChannel]], split-once:
+  /** The declarative level walk, split-once:
     * levels 1-3 literal origin|cache/a/wis2, level 4 centre dim (-test
     * allowed), level 5 notification type; `data` -> policy + discipline
     * dims then sub-discipline table/charset; metadata|reports -> charset.

@@ -1,6 +1,8 @@
 package graft.ledger
 
-import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.net.{URLDecoder, URLEncoder}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -22,22 +24,31 @@ import scala.jdk.CollectionConverters._
   */
 class MetricsLedger(dir: String) {
   private val root: Path = Paths.get(dir)
+  private val mapper = new ObjectMapper()
   Files.createDirectories(root)
 
   case class Entry(lang: String, records: Long, failedRecords: Long,
                    shaFingerprint: Long, verdict: String)
 
+  /** `lang` URL-encoded into the file name: a value holding `/` or other
+    * path characters stays one file inside the ledger directory, and
+    * plain langs (`en`, `und`) keep their literal names. */
+  private def encoded(lang: String): String =
+    URLEncoder.encode(String.valueOf(lang), UTF_8)
+
   private def fileFor(lang: String): Path =
-    root.resolve(s"lang=${lang}.commit")
+    root.resolve(s"lang=${encoded(lang)}.commit")
 
   /** Atomically commit one partition's metrics (temp + rename). */
   def commit(e: Entry): Unit = {
-    val tmp = Files.createTempFile(root, s".${e.lang}", ".tmp")
-    val payload =
-      s"""{"lang":"${e.lang}","records":${e.records},""" +
-      s""""failed_records":${e.failedRecords},""" +
-      s""""sha_fingerprint":${e.shaFingerprint},"verdict":"${e.verdict}"}"""
-    Files.write(tmp, payload.getBytes(StandardCharsets.UTF_8))
+    val tmp = Files.createTempFile(root, s".${encoded(e.lang)}", ".tmp")
+    val payload = mapper.createObjectNode()
+      .put("lang", e.lang)
+      .put("records", e.records)
+      .put("failed_records", e.failedRecords)
+      .put("sha_fingerprint", e.shaFingerprint)
+      .put("verdict", e.verdict)
+    Files.write(tmp, mapper.writeValueAsBytes(payload))
     Files.move(tmp, fileFor(e.lang), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -49,14 +60,15 @@ class MetricsLedger(dir: String) {
       stream.iterator().asScala
         .map(_.getFileName.toString)
         .filter(_.endsWith(".commit"))
-        .map(_.stripPrefix("lang=").stripSuffix(".commit"))
+        .map(f => URLDecoder.decode(
+          f.stripPrefix("lang=").stripSuffix(".commit"), UTF_8))
         .toSet
     }
 
   def read(lang: String): Option[String] = {
     val f = fileFor(lang)
     if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+      Some(new String(Files.readAllBytes(f), UTF_8))
     else None
   }
 

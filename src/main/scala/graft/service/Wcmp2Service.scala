@@ -6,7 +6,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Reports, Validator}
@@ -54,6 +54,11 @@ object Wcmp2Service {
   private val mapper = new ObjectMapper()
 
   final case class Response(status: Int, body: String)
+
+  /** Largest accepted execution request body. A WCMP2 record is a few KB;
+    * the cap keeps one request from buffering unbounded bytes on the
+    * driver. Larger bodies get a 413 without being read further. */
+  val MaxBodyBytes: Int = 8 << 20
 
   // ---------------------------------------------------------------- descr
 
@@ -116,17 +121,11 @@ object Wcmp2Service {
     else Some(mapper.writeValueAsString(node))
   }
 
-  private def oneRowTable(spark: SparkSession, json: String): DataFrame = {
-    import spark.implicits._
-    Seq(("adhoc", "record.json", "0" * 40, "und", json))
-      .toDF("repo", "path", "commit", "lang", "content")
-  }
-
   /** ETS execution (`pygeoapi_plugin.py:207-223`). */
   def executeEts(spark: SparkSession, record: String,
                  failOnSchemaValidation: Boolean,
                  runDatetime: String): Response = {
-    val validated = Validator.validate(oneRowTable(spark, record))
+    val validated = Validator.validate(Reports.oneRowTable(spark, record))
     val row = validated.select(
       col("parse_ok"),
       coalesce(col("validation.code"), lit("PASSED")).as("gate"),
@@ -146,7 +145,7 @@ object Wcmp2Service {
   /** KPI execution (`pygeoapi_plugin.py:243-258`) — ungated by design. */
   def executeKpi(spark: SparkSession, record: String,
                  runDatetime: String): Response = {
-    val validated = Validator.validate(oneRowTable(spark, record))
+    val validated = Validator.validate(Reports.oneRowTable(spark, record))
     val row = validated.select(
       col("parse_ok"),
       Reports.kpiReportJson(runDatetime).as("kpi")).head()
@@ -220,10 +219,15 @@ object Wcmp2Service {
       case ("GET", s"/processes/$id") =>
         error(404, "NoSuchProcess", s"No such process: $id")
       case ("POST", execRe(id)) =>
-        val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val dt = if (runDatetime.nonEmpty) runDatetime
-                 else java.time.Instant.now().toString
-        execute(spark, id, body, dt)
+        val bytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+        if (bytes.length > MaxBodyBytes)
+          error(413, "PayloadTooLarge",
+            s"Request body exceeds $MaxBodyBytes bytes")
+        else {
+          val dt = if (runDatetime.nonEmpty) runDatetime
+                   else java.time.Instant.now().toString
+          execute(spark, id, new String(bytes, UTF_8), dt)
+        }
       case ("POST", _) => error(404, "NotFound", s"No such endpoint: $path")
       case (_, _) =>
         error(405, "MethodNotAllowed", s"$method not allowed on $path")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dims.Dims
-import graft.functions.{Wcmp2Functions => F}
+import graft.{DeclarativeReference => R}
+import graft.expressions.{Misspelled, TopicChannelValid}
 
 /** Widened-dims behavior on NON-fixture inputs: ordinary English prose
   * must not be flagged as misspelled (pyspellchecker parity in spirit,
@@ -15,9 +16,15 @@ import graft.functions.{Wcmp2Functions => F}
 class DimsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def misspelled(s: String): Seq[String] =
-    Seq(s).toDF("s").select(F.misspelled(col("s")))
-      .as[Seq[String]].head()
+  /** Both forms of the spellcheck — the production kernel and its
+    * declarative reference — must agree; the result is checked below. */
+  private def misspelled(s: String): Seq[String] = {
+    val (kernel, declarative) = Seq(s).toDF("s")
+      .select(Misspelled.misspelled(col("s")), R.misspelled(col("s")))
+      .as[(Seq[String], Seq[String])].head()
+    assert(kernel == declarative, s"kernel/reference disagree on: $s")
+    kernel
+  }
 
   test("ordinary English prose passes the widened lexicon") {
     val prose = Seq(
@@ -47,8 +54,7 @@ class DimsSpec extends SparkSpec {
   }
 
   private def topicOk(ch: String): Boolean =
-    Seq(ch).toDF("c").select(Dims.validTopicChannel(col("c")))
-      .as[Boolean].head()
+    topicOkWith(ch, Dims.subDisciplineTable())
 
   test("level-wise topic validation accepts arbitrary real channels") {
     // channels NOT in any precomputed set: different centres,
@@ -76,9 +82,15 @@ class DimsSpec extends SparkSpec {
     assert(!topicOk("origin/a/wis2/de-dwd/bulletins/core/weather/x")) // type
   }
 
-  private def topicOkWith(ch: String, table: Option[Set[String]]): Boolean =
-    Seq(ch).toDF("c").select(Dims.validTopicChannel(col("c"), table))
-      .as[Boolean].head()
+  /** Production walk and declarative reference, asserted to agree. */
+  private def topicOkWith(ch: String, table: Option[Set[String]]): Boolean = {
+    val (kernel, declarative) = Seq(ch).toDF("c")
+      .select(TopicChannelValid.topicChannelValid(col("c"), table),
+        R.validTopicChannel(col("c"), table))
+      .as[(Boolean, Boolean)].head()
+    assert(kernel == declarative, s"kernel/reference disagree on: $ch")
+    kernel
+  }
 
   test("published sub-discipline table pins levels >= 8: charset-valid " +
        "but unpublished tokens fail WITH the table, pass without") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.engine.{DatasetRules, Validator}
 import graft.ledger.MetricsLedger
@@ -146,5 +147,34 @@ class EngineSpec extends SparkSpec {
     recommitted.foreach { case (lang, fp) =>
       assert(ledger.read(lang).get.contains(s""""sha_fingerprint":$fp"""))
     }
+  }
+
+  test("metrics ledger: a lang with path and JSON metacharacters " +
+       "round-trips through commit, committedLangs and pendingOnly") {
+    val dir = Files.createTempDirectory("ledger")
+    val ledger = new MetricsLedger(dir.toString)
+    val odd = "x/../\"q\" +%"
+    val records = RecordTable.fixtures(spark)
+      .withColumn("lang", when(col("lang") === "en", lit(odd))
+        .otherwise(col("lang")))
+    ledger.commitVerdicts(Validator.partitionVerdicts(
+      Validator.validate(records)).where(col("lang") === odd))
+    assert(ledger.committedLangs() == Set(odd))
+    // one commit file, directly inside the ledger directory
+    val files = scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toList)
+    assert(files.size == 1 && files.head.endsWith(".commit"), files)
+    assert(ledger.pendingOnly(records).where(col("lang") === odd).count() == 0)
+    assert(ledger.pendingOnly(records).count() ==
+      records.where(col("lang") =!= odd).count())
+    val doc = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(ledger.read(odd).get)
+    assert(doc.path("lang").asText == odd)
+    assert(doc.fieldNames().asScala.toList == List("lang", "records",
+      "failed_records", "sha_fingerprint", "verdict"))
+    // plain langs keep their literal file names
+    ledger.commitVerdicts(Validator.partitionVerdicts(
+      Validator.validate(records)).where(col("lang") === "fr"))
+    assert(Files.exists(dir.resolve("lang=fr.commit")))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.catalog.KpiRules
 import graft.functions.{GeoFunctions, Wcmp2Functions => F}
+import graft.{DeclarativeReference => R}
 
 /** Unit goldens from `/root/reference/tests/run_tests.py:230-272` plus
   * property tests for the pure kernels. */
@@ -82,14 +83,14 @@ class FunctionsSpec extends SparkSpec {
 
   test("pyCapitalize matches Python str.capitalize semantics") {
     val got = Seq("surface weather", "Surface Weather", "ABC def", "")
-      .toDF("s").select(F.pyCapitalize(col("s"))).as[String].collect()
+      .toDF("s").select(R.pyCapitalize(col("s"))).as[String].collect()
     assert(got.toSeq == Seq("Surface weather", "Surface weather",
       "Abc def", ""))
   }
 
   test("pySplitWs matches Python str.split() semantics") {
     val got = Seq("  a  b\tc ", "", "   ")
-      .toDF("s").select(F.pySplitWs(col("s"))).as[Seq[String]].collect()
+      .toDF("s").select(R.pySplitWs(col("s"))).as[Seq[String]].collect()
     assert(got.toSeq == Seq(Seq("a", "b", "c"), Seq(), Seq()))
   }
 
@@ -124,7 +125,7 @@ class FunctionsSpec extends SparkSpec {
   test("spell tokens skip numerics and find vendored-dictionary misses") {
     val mis = Seq("Surface weather observations 30 days",
                   "Surface wether observations")
-      .toDF("s").select(F.misspelled(col("s"))).as[Seq[String]].collect()
+      .toDF("s").select(R.misspelled(col("s"))).as[Seq[String]].collect()
     assert(mis(0) == Seq())
     assert(mis(1) == Seq("wether"))
   }

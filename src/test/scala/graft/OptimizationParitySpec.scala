@@ -3,7 +3,7 @@ package graft
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Wcmp2Functions => F}
+import graft.{DeclarativeReference => R}
 import graft.sources.RecordTable
 
 /** Round-6 optimization parity pins: every hot-path rewrite is asserted
@@ -72,7 +72,7 @@ class OptimizationParitySpec extends SparkSpec {
       .select(graft.expressions.Misspelled.misspelled(col("s")))
       .as[Seq[String]].collect()
     val declarative = adversarial.toDF("s")
-      .select(F.misspelled(col("s"))).as[Seq[String]].collect()
+      .select(R.misspelled(col("s"))).as[Seq[String]].collect()
     adversarial.indices.foreach { i =>
       assert(kernel(i) == declarative(i),
         s"spellcheck mismatch on '${adversarial(i)}'")
@@ -97,7 +97,7 @@ class OptimizationParitySpec extends SparkSpec {
   }
 
   test("floatLikeToken matches the floatLike regex over token space") {
-    val re = Pattern.compile(F.floatLike)
+    val re = Pattern.compile(R.floatLike)
     // token space = lowercased \w/' runs; enumerate a dense adversarial set
     val toks = Seq("inf", "infinity", "nan", "in", "infinit", "nans",
       "0", "9", "007", "1_0", "1_000_000", "1_", "_1", "1__2", "1e5",
@@ -126,8 +126,6 @@ class OptimizationParitySpec extends SparkSpec {
   }
 
   test("title facts kernel fields: parity with the declarative KPI forms") {
-    val acronymRe = "\\b([A-Z]{2,}\\d*)\\b"
-    val bulletinRe = "[A-Z]{4}\\d{2}[\\s_]*[A-Z]{4}"
     val titles = Seq(
       "Surface weather observations", "surface weather observations",
       "SURFACE Weather OBS2", "NOAA GOES-16 ABI imagery CONUS sector",
@@ -138,27 +136,89 @@ class OptimizationParitySpec extends SparkSpec {
       "ACRO1 ACRO2 ACRO3 ACRO4 many acronyms",
       "trailing spaces   ", "   leading", "tab\tseparated\ttitle")
     val df = (titles.map(Option(_)) :+ None).toDF("t")
-    val declarative = df.select(
-        forall(F.pySplitWs(col("t")), F.pyIsAlnum).as("alnum"),
-        (F.pyCapitalize(F.pyStrip(regexp_replace(col("t"), acronymRe, "")))
-          === F.pyStrip(regexp_replace(col("t"), acronymRe, ""))).as("cap"),
-        size(regexp_extract_all(col("t"), lit(acronymRe), lit(1))).as("nacr"),
-        col("t").rlike(bulletinRe).as("bul"))
+    val facts = Seq("words", "stripped", "all_alnum", "cap_ok",
+      "n_acronyms", "has_bulletin")
+    val declarative = df.select(R.titleFacts(col("t")).as("k"))
+      .select(facts.map(f => col(s"k.$f")): _*)
       .collect()
     val kernel = df.select(
         graft.expressions.TitleWords.titleWords(col("t")).as("k"))
-      .select(col("k.all_alnum"), col("k.cap_ok"), col("k.n_acronyms"),
-        col("k.has_bulletin"))
+      .select(facts.map(f => col(s"k.$f")): _*)
       .collect()
     declarative.indices.foreach { i =>
       val name = if (i < titles.length) s"'${titles(i)}'" else "null"
-      (0 to 3).foreach { c =>
+      facts.indices.foreach { c =>
         assert(kernel(i).isNullAt(c) == declarative(i).isNullAt(c) &&
           (kernel(i).isNullAt(c) || kernel(i).get(c) == declarative(i).get(c)),
           s"title-fact col $c mismatch on $name: " +
             s"kernel=${kernel(i)} declarative=${declarative(i)}")
       }
     }
+  }
+
+  test("link-pool kernel: parity with the declarative K5 pool, quirks " +
+       "included") {
+    import org.apache.spark.sql.Row
+    def doc(links: String, themes: String, contacts: String): String =
+      s"""{"links":$links,"properties":{"themes":$themes,""" +
+        s""""contacts":$contacts}}"""
+    val links = """[{"href":"https://a/1","type":"text/html"},
+      |{"href":"mqtts://broker","type":null},{"href":null,"type":"x"},
+      |null,{"href":"httpfoo"},{"href":"HTTP://upper"},
+      |{"href":"ftp://f"}]""".stripMargin
+    val goodThemes = """[{"concepts":[{"id":"c","url":"https://c/1"},
+      |{"id":"d","url":null},null,{"id":"e","url":"urn:e"}],
+      |"scheme":"https://scheme/1"},
+      |{"concepts":[],"scheme":"https://scheme/2"},
+      |{"concepts":[{"url":"http://c/2"}],"scheme":"urn:not-http"},
+      |{"concepts":[{"url":"http://c/3"}],"scheme":null}]""".stripMargin
+    val contacts = """[{"links":[{"href":"https://k/1"},{"href":null},
+      |{"href":"mailto:x@y"},null]},{"links":null},{"roles":["host"]},
+      |null,{"links":[{"href":"http://k/2","type":"ignored"}]}]""".stripMargin
+    val cases: Seq[(String, String)] = Seq(
+      "all sources" -> doc(links, goodThemes, contacts),
+      // a null theme element drops the WHOLE theme contribution
+      "null theme" -> doc(links,
+        """[{"concepts":[{"url":"https://c/1"}],"scheme":"https://s"},null]""",
+        contacts),
+      // so does a theme whose `concepts` is null (missing or explicit)
+      "missing concepts" -> doc("[]",
+        """[{"concepts":[{"url":"https://c/1"}],"scheme":"https://s"},
+          |{"scheme":"https://s2"}]""".stripMargin, "[]"),
+      "null concepts" -> doc("null",
+        """[{"concepts":null,"scheme":"https://s"}]""", "null"),
+      "null contact links only" -> doc("null", "null",
+        """[{"links":null},null]"""),
+      "all null" -> doc("null", "null", "null"),
+      "no properties" -> """{"links":[{"href":"https://only"}]}""",
+      "empty doc" -> "{}") ++
+      RecordTable.fixtureNames.map(n => n -> RecordTable.fixtureContent(n))
+    val rec = cases.map(_._2).toDF("c")
+      .select(graft.expressions.JsonFacts.jsonFacts(col("c")).as("p"))
+      .select(col("p.rec.links").as("l"),
+        col("p.rec.properties.themes").as("t"),
+        col("p.rec.properties.contacts").as("k"))
+    def pools(pool: org.apache.spark.sql.Column): Seq[Seq[(String, String)]] =
+      rec.select(pool).collect().toSeq.map(r =>
+        if (r.isNullAt(0)) null
+        else r.getSeq[Row](0).map(e => (e.getString(0), e.getString(1))))
+    val kernel = pools(graft.expressions.LinkPoolExpr.linkPool(
+      col("l"), col("t"), col("k")))
+    val declarative = pools(R.httpLinkPool(col("l"), col("t"), col("k")))
+    cases.indices.foreach { i =>
+      assert(kernel(i) == declarative(i),
+        s"link-pool mismatch on '${cases(i)._1}': kernel=${kernel(i)} " +
+          s"declarative=${declarative(i)}")
+    }
+    // the quirks are exercised, not vacuously equal
+    val recordHrefs = Seq("https://a/1" -> "text/html", "httpfoo" -> null)
+    val contactHrefs = Seq("https://k/1" -> null, "http://k/2" -> null)
+    assert(kernel(0) == recordHrefs ++ Seq("https://c/1" -> null,
+      "https://scheme/1" -> null, "https://scheme/2" -> null,
+      "http://c/2" -> null, "http://c/3" -> null) ++ contactHrefs)
+    assert(kernel(1) == recordHrefs ++ contactHrefs)
+    assert(kernel(2).isEmpty && kernel(3).isEmpty && kernel(4).isEmpty)
+    assert(kernel(6) == Seq("https://only" -> null))
   }
 
   test("topic-channel kernel: parity with the declarative level walk") {
@@ -192,7 +252,7 @@ class OptimizationParitySpec extends SparkSpec {
       Some(Set.empty[String]))
     tables.foreach { table =>
       val declarative = channels.toDF("c")
-        .select(Dims.validTopicChannel(col("c"), table))
+        .select(R.validTopicChannel(col("c"), table))
         .as[Boolean].collect()
       val kernel = channels.toDF("c")
         .select(graft.expressions.TopicChannelValid
@@ -204,7 +264,7 @@ class OptimizationParitySpec extends SparkSpec {
       }
       // null input: the declarative composition lands in otherwise(false)
       val nullRes = Seq(Option.empty[String]).toDF("c")
-        .select(Dims.validTopicChannel(col("c"), table).as("d"),
+        .select(R.validTopicChannel(col("c"), table).as("d"),
           graft.expressions.TopicChannelValid
             .topicChannelValid(col("c"), table).as("k"))
         .as[(Boolean, Boolean)].head()

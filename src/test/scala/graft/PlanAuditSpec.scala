@@ -13,7 +13,8 @@ import graft.sources.RecordTable
   *
   *  - single-parse: exactly one JsonFacts kernel, zero JsonToStructs on
   *    every validator output path (the round-1 33x-reparse regression,
-  *    mechanically guarded — the same check `graft.Profile` prints);
+  *    mechanically guarded), and each second-barrier kernel exactly once
+  *    (a re-inlined duplicate would re-run the kernel per reference);
   *  - shuffle budget: exact dedup is ONE exchange (groupBy on the
   *    content hash; the operator's ranked-member window shares that
   *    partitioning);
@@ -33,30 +34,38 @@ class PlanAuditSpec extends SparkSpec {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  private def countParseExprs(df: DataFrame): (Int, Int) = {
-    var facts = 0; var js = 0
+  /** Occurrences of each expression class anywhere in the optimized
+    * plan's expression trees. */
+  private def exprCounts(df: DataFrame): Map[Class[_], Int] = {
+    val counts = scala.collection.mutable.Map.empty[Class[_], Int]
     df.queryExecution.optimizedPlan.foreach { node =>
-      node.expressions.foreach { e =>
-        facts += e.collect { case f: graft.expressions.JsonFacts => f }.size
-        js += e.collect {
-          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
-        }.size
-      }
+      node.expressions.foreach(_.foreach { e =>
+        counts(e.getClass) = counts.getOrElse(e.getClass, 0) + 1
+      })
     }
-    (facts, js)
+    counts.toMap.withDefaultValue(0)
   }
 
   test("single-parse invariant: one JsonFacts, zero JsonToStructs on " +
        "every validator output path") {
+    import graft.expressions._
+    val expected: Seq[(Class[_], Int)] = Seq(
+      classOf[JsonFacts] -> 1,
+      classOf[org.apache.spark.sql.catalyst.expressions.JsonToStructs] -> 0,
+      classOf[Misspelled] -> 2, // title + description
+      classOf[TitleWords] -> 1,
+      classOf[LinkPoolExpr] -> 1,
+      classOf[Previews] -> 1)
     val v = Validator.validate(RecordTable.fixtures(spark))
-    for (df <- Seq(
-        Validator.violations(v),
-        Validator.partitionVerdicts(v),
-        v.select("ets_tests", "ets_summary", "kpi_tests", "kpi_summary",
-          "validation", "sha256"))) {
-      val (facts, js) = countParseExprs(df)
-      assert(facts == 1, s"expected exactly 1 JsonFacts, got $facts")
-      assert(js == 0, s"expected 0 JsonToStructs, got $js")
+    for ((path, df) <- Seq(
+        "violations" -> Validator.violations(v),
+        "partitionVerdicts" -> Validator.partitionVerdicts(v),
+        "select" -> v.select("ets_tests", "ets_summary", "kpi_tests",
+          "kpi_summary", "validation", "sha256"))) {
+      val counts = exprCounts(df)
+      for ((cls, n) <- expected)
+        assert(counts(cls) == n,
+          s"$path: expected $n ${cls.getSimpleName}, got ${counts(cls)}")
     }
   }
 

@@ -121,4 +121,21 @@ class ServiceSpec extends SparkSpec {
       """{"inputs":{"record":"definitely not json"}}""")
     assert(ec == 400 && eb.contains("Encoding error"))
   }
+
+  test("request body is capped: a body at the cap executes, one byte " +
+       "over it is refused with 413 in the error-document shape") {
+    val cap = Wcmp2Service.MaxBodyBytes
+    val body = execBody("wcmp2-passing.json")
+    def padded(n: Int): String = body + " " * (n - body.getBytes(UTF_8).length)
+    val (okCode, okBody) = http("POST",
+      "/processes/pywcmp-wis2-wcmp2-ets/execution", padded(cap))
+    assert(okCode == 200 && okBody.contains("\"PASSED\":12"))
+
+    val (code, text) = http("POST",
+      "/processes/pywcmp-wis2-wcmp2-ets/execution", padded(cap + 1))
+    assert(code == 413)
+    val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+    assert(doc.path("code").asText == "PayloadTooLarge")
+    assert(doc.path("description").asText.contains(cap.toString))
+  }
 }
